@@ -2,6 +2,8 @@ package graft.engine
 
 import java.sql.Timestamp
 
+import scala.util.{Success, Try}
+
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,15 +16,19 @@ import graft.store.MetricSource
   * Pure-plan vs side-effect separation mirrors the reference's
   * `--no-alerts` split (reference Rakefile:4-7): [[evaluate]] is a pure
   * function of (source, spec, now) usable for backtests and UI tests;
-  * [[persistRun]] appends the `job_data` / `job_errors` twins.
+  * [[runBatch]] evaluates AND appends the `job_data` / `job_errors` twins.
   * Verdict collect() is bounded by series count — never data volume.
   *
-  * E1 runs ONE scan of the store per run: [[runOnce]] derives the
-  * verdicts AND the chart payload from a single aggregation
-  * ([[Planner.planWithPoints]]); the payload/error writes read only
-  * driver-local rows. The hot path takes a [[MetricSource]] so the
-  * window bounds reach the storage scan (PushedFilters), not a
-  * post-conversion filter.
+  * E1 costs a fixed number of Spark actions per tick, whatever the
+  * number K of due monitors: every monitor's plan
+  * ([[Planner.planWithPoints]] — verdicts AND chart payload from one
+  * aggregation) is projected to one shape and unioned, so the tick is
+  * ONE collect, then ONE `job_data` append and at most ONE `job_errors`
+  * append, both `partitionBy("job_id")` at the table root over
+  * driver-local rows (neither write touches the store). [[runOnce]] is
+  * the K = 1 case of the same code. The hot path takes a
+  * [[MetricSource]] so the window bounds reach the storage scan
+  * (PushedFilters), not a post-conversion filter.
   */
 object Runner {
 
@@ -31,32 +37,62 @@ object Runner {
   final case class ChartPoint(ts: Timestamp, value: java.lang.Double)
   final case class ChartSeries(metric: String, points: Seq[ChartPoint])
 
+  /** Driver-side `job_data` row; `chart` becomes the JSON `data` column
+    * (reference db/schema.rb:29-36). This and [[JobErrorRow]] are public
+    * because Spark's generated encoder code calls their accessors. */
+  final case class JobDataRow(window_end: Timestamp, status: String,
+      chart: Seq[ChartSeries], job_id: Long)
+  /** Driver-side `job_errors` row (reference db/schema.rb:38-48). */
+  final case class JobErrorRow(at: Timestamp, message: String, status: String,
+      job_id: Long)
+
   /** E2 / pure evaluation: verdict rows only, no side effects. */
   def evaluate(spark: SparkSession, source: MetricSource, spec: MonitorSpec,
-      now: Timestamp): Seq[Verdict] = {
-    val df = Planner.plan(spark, source, spec, now)
-    toVerdicts(spec, df.columns, df.collect().toSeq)
-  }
+      now: Timestamp): Seq[Verdict] =
+    shaped(Planner.plan(spark, source, spec, now), withPoints = false)
+      .collect().toSeq.map(toVerdict(spec, _))
 
   def evaluate(spark: SparkSession, store: DataFrame, spec: MonitorSpec,
       now: Timestamp): Seq[Verdict] =
     evaluate(spark, MetricSource.ofFrame(store), spec, now)
 
-  private def toVerdicts(spec: MonitorSpec, columns: Seq[String],
-      rows: Seq[Row]): Seq[Verdict] = {
-    val redCols = columns.filter(_.startsWith("red_")).sorted
-    val firstRed = redCols.headOption.getOrElse("red_mean")
-    rows.map { r =>
-      val passed = !r.isNullAt(r.fieldIndex("passed")) && r.getBoolean(r.fieldIndex("passed"))
-      Verdict(
-        jobId = spec.id,
-        metric = r.getString(r.fieldIndex("metric")),
-        windowEnd = r.getTimestamp(r.fieldIndex("window_end")),
-        observed = Option(r.get(r.fieldIndex(firstRed))).map(_.toString.toDouble),
-        passed = passed,
-        message = if (passed) "" else s"${spec.name}: ${spec.monitorExpr} violated")
-    }
+  /** Every plan projected to the one shape the decoder reads:
+    * (job_id, metric, window_end, observed, passed[, points]), where
+    * `observed` is the first `red_*` column in name order. */
+  private def shaped(plan: DataFrame, withPoints: Boolean): DataFrame = {
+    val observed = plan.columns.filter(_.startsWith("red_")).min
+    val cols = Seq(col("job_id"), col("metric"), col("window_end"),
+      col(observed).cast("double").as("observed"), col("passed")) ++
+      (if (withPoints) Seq(col("points")) else Nil)
+    plan.select(cols: _*)
   }
+
+  /** The one verdict decoder over a [[shaped]] row. */
+  private def toVerdict(spec: MonitorSpec, r: Row): Verdict = {
+    val passed = !r.isNullAt(4) && r.getBoolean(4)
+    Verdict(
+      jobId = spec.id,
+      metric = r.getString(1),
+      windowEnd = r.getTimestamp(2),
+      observed = if (r.isNullAt(3)) None else Some(r.getDouble(3)),
+      passed = passed,
+      message = if (passed) "" else s"${spec.name}: ${spec.monitorExpr} violated")
+  }
+
+  /** Chart payload of one job: points merged per metric across targets
+    * (a metric matched by two targets charts once), sorted by ts for a
+    * deterministic payload. */
+  private def chartOf(rows: Seq[Row]): Seq[ChartSeries] =
+    rows
+      .map { r =>
+        val pts = r.getSeq[Row](5).map { p =>
+          ChartPoint(p.getTimestamp(0), p.get(1).asInstanceOf[java.lang.Double])
+        }
+        (r.getString(1), pts)
+      }
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (m, grps) =>
+        ChartSeries(m, grps.flatMap(_._2).sortBy(_.ts.getTime)) }
 
   /** Overall job status from per-series verdicts: any failing series
     * fails the job (a raise in the reference's sandbox fails the run);
@@ -66,98 +102,90 @@ object Runner {
     else if (verdicts.forall(_.passed)) JobStatus.Success
     else JobStatus.Failed
 
-  /** E1 persistence: append one `job_data` row (JSON chart payload —
-    * reference db/schema.rb:29-36) and, on failure, `job_errors` rows
-    * (db/schema.rb:38-48). Both land in the standard partitioned layout
-    * (`…/job_id=N/…`), but each run writes DIRECTLY into its own job's
-    * partition directory rather than `partitionBy` at the table root:
-    * the Hadoop committer stages under `<root>/_temporary/0/`, so two
-    * jobs appending to the same root concurrently delete each other's
-    * staging — writing per-job roots makes concurrent monitor runs
-    * (different jobs; same-job overlap is scheduler-suppressed)
-    * commit-safe with no driver lock. The chart rows are driver-local
-    * (already collected by the run's single scan), so neither write
-    * touches the store. */
-  def persistRun(spark: SparkSession, spec: MonitorSpec, verdicts: Seq[Verdict],
-      chart: Seq[ChartSeries], jobDataPath: String, jobErrorsPath: String): Unit = {
-    import spark.implicits._
-    val status = jobStatus(verdicts)
-    val payload =
-      (if (chart.isEmpty) spark.emptyDataset[ChartSeries] else chart.toDS()).toDF()
-        .agg(to_json(collect_list(struct(col("metric"), col("points")))).as("chart"))
-    // explicit timestamp type: on the empty-verdicts (error) path the
-    // literal is null and an untyped lit(null) would be unwritable VOID
-    val windowEnd = lit(verdicts.headOption.map(_.windowEnd).orNull)
-      .cast(org.apache.spark.sql.types.TimestampType)
-    val run = payload.select(
-      windowEnd.as("window_end"),
-      lit(status).as("status"),
-      col("chart").as("data"))
-    run.write.mode(SaveMode.Append).parquet(s"$jobDataPath/job_id=${spec.id}")
-
-    if (status != JobStatus.Success) {
-      verdicts.filterNot(_.passed).toDF()
-        .select(col("windowEnd").as("at"), col("message"), lit(status).as("status"))
-        .write.mode(SaveMode.Append).parquet(s"$jobErrorsPath/job_id=${spec.id}")
-    }
-  }
-
-  /** E1: evaluate + persist + (throttled) alert rows. Returns verdicts.
-    * Alert dispatch is a side-effecting sink fed by the returned rows —
+  /** E1: evaluate + persist one monitor. Returns verdicts. Alert
+    * dispatch is a side-effecting sink fed by the returned rows —
     * deliberately OUT of the query plan (SURVEY §2.1 S7). */
   def runOnce(spark: SparkSession, source: MetricSource, spec: MonitorSpec,
-      now: Timestamp, jobDataPath: String, jobErrorsPath: String): Seq[Verdict] = {
-    val df = Planner.planWithPoints(spark, source, spec, now)
-    val rows = df.collect().toSeq
-    val verdicts = toVerdicts(spec, df.columns, rows)
-    // Merge chart points per metric across targets (a metric matched by
-    // two targets charts once), sorted by ts for a deterministic payload.
-    val chart = rows
-      .map { r =>
-        val pts = r.getSeq[Row](r.fieldIndex("points")).map { p =>
-          ChartPoint(p.getTimestamp(0), p.get(1).asInstanceOf[java.lang.Double])
-        }
-        (r.getString(r.fieldIndex("metric")), pts)
-      }
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (m, grps) =>
-        ChartSeries(m, grps.flatMap(_._2).sortBy(_.ts.getTime)) }
-    persistRun(spark, spec, verdicts, chart, jobDataPath, jobErrorsPath)
-    verdicts
-  }
+      now: Timestamp, jobDataPath: String, jobErrorsPath: String): Seq[Verdict] =
+    runBatch(spark, source, Seq(spec), now, jobDataPath, jobErrorsPath)(spec.id)
 
   def runOnce(spark: SparkSession, store: DataFrame, spec: MonitorSpec,
       now: Timestamp, jobDataPath: String, jobErrorsPath: String): Seq[Verdict] =
     runOnce(spark, MetricSource.ofFrame(store), spec, now, jobDataPath, jobErrorsPath)
 
-  /** E1 batched (the thousands-of-monitors cost model): K due jobs that
-    * fire on the same tick share ONE scan of the store. The union of
-    * their windows is scanned once and persisted; each job's plan then
-    * clips its own (narrower) window from the cached slice — a filter
-    * over in-memory columnar batches, not a second storage scan. Results
-    * are identical to K independent [[runOnce]] calls (SchedulerSpec
-    * proves verdict equality and the single source scan).
+  /** One job's evaluated run, before persistence; `failure` is why its
+    * plan could not be built. */
+  private final case class Run(spec: MonitorSpec, verdicts: Seq[Verdict],
+      chart: Seq[ChartSeries], failure: Option[Throwable]) {
+    def status: String = jobStatus(verdicts)
+  }
+
+  private val persistLock = new Object
+
+  /** E1 batched (the thousands-of-monitors cost model): the K due jobs of
+    * one tick cost ONE plan, ONE collect and one append per table.
     *
-    * The cached slice is window-bounded (the whole point of monitor
-    * windows: KB-to-MB per job even at 100 TB of history), so pinning it
-    * for the batch is safe. */
+    *  - Scan: for K > 1 the union of the windows is scanned once and
+    *    persisted; each job's plan clips its own (narrower) window from
+    *    the cached slice. K = 1 keeps its single direct scan. The slice is
+    *    window-bounded (KB-to-MB per job even at 100 TB of history), so
+    *    pinning it for the batch is safe.
+    *  - Plan: each job's plan is built on its own; a plan that fails to
+    *    build (bad expression or target) leaves the union and its job is
+    *    recorded as an `error` run whose `job_errors` row carries the
+    *    exception message, so one bad spec cannot sink the tick.
+    *  - Persist: one `job_data` row per job and one `job_errors` row per
+    *    failing series (plus the build failures), each table appended
+    *    once, `partitionBy("job_id")` at its root: one file per job per
+    *    tick in the `job_id=N/` layout. Root-level appends share the
+    *    committer's `_temporary/0/` staging, so concurrent appends (other
+    *    batches, per-job runs) would delete each other's files mid-commit;
+    *    every append therefore runs under one JVM-wide lock. The rows are
+    *    metadata-sized, so serializing them is cheap.
+    *
+    * Results are identical to K independent [[evaluate]] calls
+    * (SchedulerSpec proves verdict equality and the single source scan). */
   def runBatch(spark: SparkSession, source: MetricSource, specs: Seq[MonitorSpec],
       now: Timestamp, jobDataPath: String, jobErrorsPath: String): Map[Long, Seq[Verdict]] = {
     if (specs.isEmpty) return Map.empty
-    val bounds = specs.map { sp =>
-      val until = sp.toDate.getOrElse(now)
-      (until.getTime - sp.minutes * 60000L, until.getTime)
+    def until(sp: MonitorSpec) = sp.toDate.getOrElse(now)
+    val slice = if (specs.size < 2) None else Some(source.scan(
+      new Timestamp(specs.map(sp => until(sp).getTime - sp.minutes * 60000L).min),
+      new Timestamp(specs.map(until(_).getTime).max)).persist())
+    val shared = slice.fold(source)(MetricSource.ofFrame)
+    val runs = try {
+      val plans = specs.map(sp =>
+        sp -> Try(shaped(Planner.planWithPoints(spark, shared, sp, now), withPoints = true)))
+      val built = plans.collect { case (_, Success(df)) => df }
+      val rows =
+        if (built.isEmpty) Map.empty[Long, Seq[Row]]
+        else built.reduce(_ unionByName _).collect().toSeq.groupBy(_.getLong(0))
+      plans.map { case (sp, plan) =>
+        val rs = rows.getOrElse(sp.id, Nil)
+        Run(sp, rs.map(toVerdict(sp, _)), chartOf(rs), plan.failed.toOption)
+      }
+    } finally slice.foreach(_.unpersist())
+
+    import spark.implicits._
+    val jobData = runs.map(r =>
+      JobDataRow(r.verdicts.headOption.map(_.windowEnd).orNull, r.status, r.chart, r.spec.id))
+    val jobErrors = runs.flatMap { r =>
+      r.verdicts.filterNot(_.passed).map(v =>
+        JobErrorRow(v.windowEnd, v.message, r.status, r.spec.id)) ++
+        r.failure.map(e => JobErrorRow(until(r.spec),
+          Option(e.getMessage).getOrElse(e.toString), r.status, r.spec.id))
     }
-    val clipped = source
-      .scan(new Timestamp(bounds.map(_._1).min), new Timestamp(bounds.map(_._2).max))
-      .persist()
-    try
-      specs.map { spec =>
-        spec.id -> runOnce(spark, MetricSource.ofFrame(clipped), spec, now,
-          jobDataPath, jobErrorsPath)
-      }.toMap
-    finally clipped.unpersist()
+    persistLock.synchronized {
+      append(jobData.toDF()
+        .select(col("window_end"), col("status"), to_json(col("chart")).as("data"), col("job_id")),
+        jobDataPath)
+      if (jobErrors.nonEmpty) append(jobErrors.toDF(), jobErrorsPath)
+    }
+    runs.map(r => r.spec.id -> r.verdicts).toMap
   }
+
+  private def append(rows: DataFrame, path: String): Unit =
+    rows.coalesce(1).write.mode(SaveMode.Append).partitionBy("job_id").parquet(path)
 
   /** E3 read path: latest persisted run per job (O1). */
   def latestRuns(spark: SparkSession, jobDataPath: String): DataFrame = {

@@ -5,6 +5,7 @@ import java.time.Instant
 import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
 
@@ -19,16 +20,23 @@ import graft.store.MetricSource
   * `next_run` (db/schema.rb:62) is due, and advances `next_run` from the
   * job's `cron_expr`.
   *
-  * Spark-native shape: ONE driver-side loop, bounded worker pool. Each
-  * due job's run is a single Catalyst plan ([[Runner.runOnce]]) submitted
-  * from its worker thread under a named FAIR scheduler pool, so N
-  * concurrent monitor runs share the cluster fairly instead of FIFO
+  * Spark-native shape: ONE driver-side loop, bounded worker pool. A tick
+  * with several due jobs and a batch runner is one pool task
+  * ([[Runner.runBatch]]: one plan, one collect, one append per table);
+  * otherwise each due job's run ([[Runner.runOnce]]) is its own task.
+  * Every task submits its Spark jobs under a named FAIR scheduler pool,
+  * so concurrent runs share the cluster fairly instead of FIFO
   * head-of-line blocking (the host session should set
   * `spark.scheduler.mode=FAIR`; the pool name is a thread-local property,
-  * which is the public Spark mechanism for per-job pools). Job *state* is
-  * driver-memory (monitor count ≈ thousands, metadata-sized) with a
-  * parquet save/load twin for cross-restart parity with the reference's
-  * DB-persisted `next_run`.
+  * which is the public Spark mechanism for per-job pools). Concurrent
+  * runs compute in parallel, but their `job_data` / `job_errors` appends
+  * share one table root and so take [[Runner]]'s JVM-wide persist lock
+  * one at a time. Job *state* is driver-memory (monitor count ≈
+  * thousands, metadata-sized) with a parquet save/load twin for
+  * cross-restart parity with the reference's DB-persisted `next_run`.
+  *
+  * A run that throws records status `error` and keeps the cause
+  * (`e.toString`) in its [[JobSnapshot]]'s `lastError`.
   *
   * Overlap rule: a firing that comes due while the same job's previous
   * run is still executing is SKIPPED (counted, `next_run` still
@@ -43,9 +51,10 @@ final class Scheduler(
     spark: Option[SparkSession] = None,
     fairPool: String = "monitors",
     /** When set, a tick's whole due set is evaluated as ONE batch (one
-      * shared scan of the store — [[Runner.runBatch]]): the cost model
-      * for thousands of same-schedule monitors. Per-job dispatch remains
-      * the default and the fallback for single-job ticks. */
+      * shared scan, one collect, one append per table —
+      * [[Runner.runBatch]]): the cost model for thousands of
+      * same-schedule monitors. Per-job dispatch remains the default and
+      * the path for single-job ticks. */
     runBatch: Option[(Seq[MonitorSpec], Timestamp) => Map[Long, String]] = None) {
 
   /** Mutable per-job slot. `running` guards overlap; `nextRun` is the
@@ -54,6 +63,7 @@ final class Scheduler(
     @volatile var nextRun: Option[Instant] = None
     @volatile var running: Boolean = false
     @volatile var lastStatus: String = ""
+    @volatile var lastError: String = ""
     @volatile var lastRunAt: Option[Instant] = None
     var fired: Long = 0L
     var skipped: Long = 0L
@@ -109,12 +119,12 @@ final class Scheduler(
         pool.execute { () =>
           try {
             spark.foreach(_.sparkContext.setLocalProperty("spark.scheduler.pool", fairPool))
-            val statuses =
-              try batch(due.map(_.spec), fireAt)
-              catch { case scala.util.control.NonFatal(_) =>
-                due.map(_.spec.id -> JobStatus.Error).toMap }
+            val (statuses, error) =
+              try (batch(due.map(_.spec), fireAt), "")
+              catch { case NonFatal(e) => (Map.empty[Long, String], e.toString) }
             due.foreach { s =>
               s.lastStatus = statuses.getOrElse(s.spec.id, JobStatus.Error)
+              s.lastError = error
               s.lastRunAt = Some(now)
             }
           } finally {
@@ -129,10 +139,11 @@ final class Scheduler(
             try {
               // name the FAIR pool for every Spark job this run submits
               spark.foreach(_.sparkContext.setLocalProperty("spark.scheduler.pool", fairPool))
-              val status =
-                try runJob(s.spec, fireAt)
-                catch { case scala.util.control.NonFatal(_) => JobStatus.Error }
+              val (status, error) =
+                try (runJob(s.spec, fireAt), "")
+                catch { case NonFatal(e) => (JobStatus.Error, e.toString) }
               s.lastStatus = status
+              s.lastError = error
               s.lastRunAt = Some(now)
             } finally {
               s.running = false
@@ -166,12 +177,14 @@ final class Scheduler(
 
   def shutdown(): Unit = { pool.shutdown(); pool.awaitTermination(30, TimeUnit.SECONDS) }
 
+  /** `lastError` is the cause of the last run's crash (`e.toString`),
+    * empty after a run that did not throw. */
   final case class JobSnapshot(jobId: Long, nextRun: Option[Instant], running: Boolean,
-      lastStatus: String, fired: Long, skipped: Long)
+      lastStatus: String, fired: Long, skipped: Long, lastError: String)
 
   def snapshot: Seq[JobSnapshot] =
     slots.asScala.toSeq.sortBy(_._1).map { case (id, s) =>
-      JobSnapshot(id, s.nextRun, s.running, s.lastStatus, s.fired, s.skipped)
+      JobSnapshot(id, s.nextRun, s.running, s.lastStatus, s.fired, s.skipped, s.lastError)
     }
 
   /** Persist `next_run` per job (the reference keeps it in the jobs
@@ -203,9 +216,9 @@ final class Scheduler(
 
 object Scheduler {
 
-  /** Production wiring: due jobs run [[Runner.runOnce]] against the
-    * windowed metric source (bounds → PushedFilters) and persist the
-    * job_data / job_errors twins. */
+  /** Production wiring: due jobs run [[Runner.runBatch]] (one job:
+    * [[Runner.runOnce]]) against the windowed metric source (bounds →
+    * PushedFilters) and persist the job_data / job_errors twins. */
   def forSource(spark: SparkSession, source: MetricSource,
       jobDataPath: String, jobErrorsPath: String,
       parallelism: Int = 4): Scheduler =

@@ -140,7 +140,7 @@ object AlertDispatcher {
     * per channel (bounded driver-local rows: alerts × keys).
     * Serialized JVM-wide: concurrent appends through one table root
     * share the committer's `_temporary/0/` staging and can delete each
-    * other's files mid-commit (same race fixed in Runner.persistRun);
+    * other's files mid-commit (the same rule as Runner.runBatch's appends);
     * delivery batches are tiny, so a lock is cheaper than per-channel
     * write fan-out. */
   def persist(spark: SparkSession, deliveries: Seq[Delivery], path: String): Unit = {

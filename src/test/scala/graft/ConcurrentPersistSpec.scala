@@ -1,12 +1,12 @@
 package graft
-import java.nio.file.Files
 import java.sql.Timestamp
 /** Regression guard for the shared-committer race: two jobs appending
-  * through one table root shared `_temporary/0/` staging and deleted
-  * each other's files mid-commit; per-job partition roots fix it. */
+  * through one table root share `_temporary/0/` staging and can delete
+  * each other's files mid-commit; Runner's JVM-wide persist lock
+  * serializes the appends. */
 class ConcurrentPersistSpec extends SparkTestBase {
   test("concurrent runOnce for different jobs commits safely") {
-    val tmp = Files.createTempDirectory("graft-conc-probe").toString
+    val tmp = tempDir("graft-conc-probe")
     val source = graft.store.MetricSource.events(spark, "/root/testdata/sf0.001")
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (1L to 4L).map { id =>

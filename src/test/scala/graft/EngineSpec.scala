@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.engine.{Planner, Runner}
@@ -57,7 +56,7 @@ class EngineSpec extends SparkTestBase {
   }
 
   test("E1 persist + E3 latest-run read path") {
-    val tmp = Files.createTempDirectory("graft").toString
+    val tmp = tempDir("graft")
     val s = spec("mean > 1000000") // failing → job_errors written too
     Runner.runOnce(spark, store, s, Timestamp.valueOf("2024-01-15 12:00:00"),
       s"$tmp/job_data", s"$tmp/job_errors")
@@ -99,7 +98,7 @@ class EngineSpec extends SparkTestBase {
     }
     spark.listenerManager.register(listener)
     try {
-      val tmp = Files.createTempDirectory("graft-onescan").toString
+      val tmp = tempDir("graft-onescan")
       Runner.runOnce(spark, graft.store.MetricSource.events(spark, dir),
         spec("mean > 0 && count > 0"), Timestamp.valueOf("2024-01-15 12:00:00"),
         s"$tmp/job_data", s"$tmp/job_errors")
@@ -116,7 +115,7 @@ class EngineSpec extends SparkTestBase {
   }
 
   test("runOnce persists a sorted per-metric chart payload") {
-    val tmp = Files.createTempDirectory("graft-chart").toString
+    val tmp = tempDir("graft-chart")
     Runner.runOnce(spark, graft.store.MetricSource.events(spark, dir),
       spec("mean > 0", targets = Seq("events.click", "events.{click,view}")),
       Timestamp.valueOf("2024-01-15 12:00:00"), s"$tmp/job_data", s"$tmp/job_errors")
@@ -126,7 +125,7 @@ class EngineSpec extends SparkTestBase {
     assert(data.contains("events.view"))
 
     // single-metric run: the whole payload is one series → ts ascending
-    val tmp2 = Files.createTempDirectory("graft-chart2").toString
+    val tmp2 = tempDir("graft-chart2")
     Runner.runOnce(spark, graft.store.MetricSource.events(spark, dir),
       spec("mean > 0", targets = Seq("events.click")),
       Timestamp.valueOf("2024-01-15 12:00:00"), s"$tmp2/job_data", s"$tmp2/job_errors")
@@ -184,7 +183,7 @@ class EngineSpec extends SparkTestBase {
   }
 
   test("error run (no matching series) is still persisted to job_data") {
-    val tmp = Files.createTempDirectory("graft-err").toString
+    val tmp = tempDir("graft-err")
     Runner.runOnce(spark, store, spec("mean > 0", targets = Seq("nosuch.metric")),
       Timestamp.valueOf("2024-01-15 12:00:00"), s"$tmp/job_data", s"$tmp/job_errors")
     val runs = spark.read.parquet(s"$tmp/job_data").collect()

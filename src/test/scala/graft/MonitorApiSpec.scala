@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.engine.{MonitorApi, MonitorApiServer, Runner}
@@ -59,7 +58,7 @@ class MonitorApiSpec extends SparkTestBase {
   }
 
   test("latestRunsJson: one row per job with the chart payload embedded") {
-    val tmp = Files.createTempDirectory("graft-api").toString
+    val tmp = tempDir("graft-api")
     val spec = MonitorApi.parseSpec(spark,
       """{"id": 11, "targets": ["events.*"], "minutes": 720,
          "toDate": "2024-01-15 12:00:00", "monitorExpr": "mean > 0"}""")
@@ -112,7 +111,7 @@ class MonitorApiSpec extends SparkTestBase {
       c.disconnect()
       (code, text)
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft-api-http").toString
+    val tmp = tempDir("graft-api-http")
     val spec = graft.model.MonitorSpec(id = 21, name = "http", targets = Seq("events.*"),
       minutes = 720, toDate = None, cronExpr = "* * * * *", monitorExpr = "count > 0")
     Runner.runOnce(spark, source, spec, now, s"$tmp/job_data", s"$tmp/job_errors")

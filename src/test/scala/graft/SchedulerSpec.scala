@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.Instant
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
@@ -20,6 +19,8 @@ class SchedulerSpec extends SparkTestBase {
     toDate = None, cronExpr = cron, monitorExpr = "count >= 0", active = active)
 
   private def t(s: String): Instant = Timestamp.valueOf(s).toInstant
+
+  private lazy val events = graft.store.MetricSource.events(spark, "/root/testdata/sf0.001")
 
   test("interleaved cron exprs fire in order and next_run advances") {
     val runs = new ConcurrentLinkedQueue[(Long, Timestamp)]()
@@ -79,8 +80,9 @@ class SchedulerSpec extends SparkTestBase {
   }
 
   test("inactive jobs never fire; a crashing run records error status") {
+    @volatile var boom = true
     val sch = new Scheduler((sp, _) =>
-      if (sp.id == 2) throw new RuntimeException("boom") else JobStatus.Success)
+      if (sp.id == 2 && boom) throw new RuntimeException("boom") else JobStatus.Success)
     val boot = t("2024-01-15 12:00:00")
     sch.register(spec(1, "* * * * *", active = false), boot)
     sch.register(spec(2, "* * * * *"), boot)
@@ -90,7 +92,28 @@ class SchedulerSpec extends SparkTestBase {
     val snaps = sch.snapshot
     assert(snaps.find(_.jobId == 1).get.fired == 0)
     assert(snaps.find(_.jobId == 2).get.lastStatus == JobStatus.Error)
+    // the swallowed exception is kept as the cause
+    assert(snaps.find(_.jobId == 2).get.lastError == "java.lang.RuntimeException: boom")
+    assert(snaps.find(_.jobId == 1).get.lastError.isEmpty)
+    // a clean run clears it
+    boom = false
+    sch.tick(t("2024-01-15 12:02:00"))
+    sch.awaitIdle()
+    val clean = sch.snapshot.find(_.jobId == 2).get
+    assert(clean.lastStatus == JobStatus.Success && clean.lastError.isEmpty)
     sch.shutdown()
+
+    // the batch path keeps the cause for every job of the crashed batch
+    val batched = new Scheduler((_, _) => JobStatus.Success,
+      runBatch = Some((_, _) => throw new IllegalStateException("batch boom")))
+    batched.register(spec(3, "* * * * *"), boot)
+    batched.register(spec(4, "* * * * *"), boot)
+    batched.tick(t("2024-01-15 12:01:00"))
+    batched.awaitIdle()
+    assert(batched.snapshot.map(s => (s.jobId, s.lastStatus, s.lastError)) == Seq(
+      (3L, JobStatus.Error, "java.lang.IllegalStateException: batch boom"),
+      (4L, JobStatus.Error, "java.lang.IllegalStateException: batch boom")))
+    batched.shutdown()
   }
 
   test("runs execute under the named FAIR scheduler pool") {
@@ -107,7 +130,7 @@ class SchedulerSpec extends SparkTestBase {
   }
 
   test("save/load state: a restarted scheduler resumes the persisted next_run") {
-    val tmp = Files.createTempDirectory("graft-sched").toString
+    val tmp = tempDir("graft-sched")
     val boot = t("2024-01-15 12:00:00")
     val sch1 = new Scheduler((_, _) => JobStatus.Success)
     sch1.register(spec(1, "0 0 * * *"), boot) // next: Jan 16 00:00
@@ -128,7 +151,7 @@ class SchedulerSpec extends SparkTestBase {
   }
 
   test("four monitors run concurrently through one session without interference") {
-    val tmp = Files.createTempDirectory("graft-sched-conc").toString
+    val tmp = tempDir("graft-sched-conc")
     val source = graft.store.MetricSource.events(spark, "/root/testdata/sf0.001")
     val sch = Scheduler.forSource(spark, source, s"$tmp/job_data", s"$tmp/job_errors",
       parallelism = 4)
@@ -151,7 +174,7 @@ class SchedulerSpec extends SparkTestBase {
   }
 
   test("full E1 loop: failing run alerts once through sinks, re-fire throttled") {
-    val tmp = Files.createTempDirectory("graft-sched-alerts").toString
+    val tmp = tempDir("graft-sched-alerts")
     val source = graft.store.MetricSource.events(spark, "/root/testdata/sf0.001")
     val sent = new ConcurrentLinkedQueue[String]()
     val sch = Scheduler.forSourceWithAlerts(spark, source,
@@ -175,7 +198,7 @@ class SchedulerSpec extends SparkTestBase {
   }
 
   test("throttle clock is shared: a streaming-path alert suppresses the scheduled path") {
-    val tmp = Files.createTempDirectory("graft-shared-throttle").toString
+    val tmp = tempDir("graft-shared-throttle")
     val statePath = s"$tmp/alert_state"
     // the streaming path already alerted this job 10 minutes ago
     graft.state.AlertThrottle.saveStateTable(spark, statePath, Map(
@@ -202,7 +225,7 @@ class SchedulerSpec extends SparkTestBase {
   }
 
   test("same-tick monitors share ONE store scan; batch verdicts equal the per-job path") {
-    val tmp = Files.createTempDirectory("graft-sched-batch").toString
+    val tmp = tempDir("graft-sched-batch")
     val inner = graft.store.MetricSource.events(spark, "/root/testdata/sf0.001")
     val scans = new java.util.concurrent.atomic.AtomicInteger
     val counting: graft.store.MetricSource =
@@ -239,7 +262,7 @@ class SchedulerSpec extends SparkTestBase {
   }
 
   test("production wiring: due job runs end-to-end through Runner.runOnce") {
-    val tmp = Files.createTempDirectory("graft-sched-e2e").toString
+    val tmp = tempDir("graft-sched-e2e")
     val source = graft.store.MetricSource.events(spark, "/root/testdata/sf0.001")
     val sch = Scheduler.forSource(spark, source, s"$tmp/job_data", s"$tmp/job_errors",
       parallelism = 2)
@@ -254,5 +277,112 @@ class SchedulerSpec extends SparkTestBase {
     // job_id is a directory-partition column: inferred numeric on read
     assert(runs.length == 1 && runs(0).getAs[Number]("job_id").longValue == 7L)
     sch.shutdown()
+  }
+
+  test("one bad spec no longer sinks the tick: the others evaluate, persist and alert") {
+    val tmp = tempDir("graft-sched-badspec")
+    val sent = new ConcurrentLinkedQueue[String]()
+    val sch = Scheduler.forSourceWithAlerts(spark, events,
+      s"$tmp/job_data", s"$tmp/job_errors", s"$tmp/alert_state", s"$tmp/deliveries",
+      sinks = graft.state.AlertSinks.default(sent.add(_)), parallelism = 2)
+    def monitor(id: Long, expr: String) = MonitorSpec(id = id, name = s"m$id",
+      targets = Seq("events.*"), minutes = 720, toDate = None, cronExpr = "* * * * *",
+      monitorExpr = expr, alertKeys = Seq("mailto:oncall@example.com"))
+    val good = Seq(monitor(1, "count > 0"), monitor(3, "mean > 1000000"))
+    val bad = monitor(2, "1 < 2") // references no reduction: its plan cannot be built
+    (good :+ bad).foreach(sch.register(_, t("2024-01-15 11:59:00")))
+    sch.tick(t("2024-01-15 12:00:00")); sch.awaitIdle()
+    val snap = sch.snapshot.map(s => s.jobId -> s).toMap
+    val persisted = spark.read.parquet(s"$tmp/job_data").select("job_id", "status").collect()
+      .map(r => r.getAs[Number](0).longValue -> r.getString(1)).toMap
+    assert(snap(1).lastStatus == JobStatus.Success && snap(3).lastStatus == JobStatus.Failed)
+    good.foreach(sp => assert(persisted(sp.id) == snap(sp.id).lastStatus, s"job ${sp.id}"))
+    assert(persisted(2) == JobStatus.Error && snap(2).lastStatus == JobStatus.Error)
+    val errs = spark.read.parquet(s"$tmp/job_errors").where("job_id = 2")
+      .select("message", "status").collect()
+    assert(errs.length == 1 && errs(0).getString(0).contains("references no reduction") &&
+      errs(0).getString(1) == JobStatus.Error, errs.mkString)
+    // the throttle ran: both non-success jobs alerted
+    val alerted = graft.state.AlertDispatcher.read(spark, s"$tmp/deliveries")
+      .select("jobId").collect().map(_.getLong(0)).toSet
+    assert(alerted == Set(2L, 3L) && sent.size == 2, s"$alerted $sent")
+    sch.shutdown()
+  }
+
+  test("a batched tick costs one collect and one append per table, whatever K") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // SQL executions, not Spark jobs: AQE submits one job per shuffle
+    // stage per union branch, so the job count still grows with K
+    val collects = new AtomicInteger(0)
+    val writes = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        if (funcName == "collect") collects.incrementAndGet()
+        qe.logical.collect { case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString }
+          .foreach(writes.add)
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // listener delivery is async: poll until the counts are stable
+    def settle(): Unit = {
+      var last = -1; var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val cur = collects.get() * 1000 + writes.size
+        if (cur == last) stable += 1 else { stable = 0; last = cur }
+      }
+    }
+    spark.listenerManager.register(listener)
+    try Seq(2, 6).foreach { k =>
+      val tmp = tempDir(s"graft-sched-actions$k")
+      val sch = Scheduler.forSource(spark, events, s"$tmp/job_data", s"$tmp/job_errors",
+        parallelism = 2)
+      val specs = (1L to k.toLong).map { id =>
+        MonitorSpec(id = id, name = s"k$id", targets = Seq("events.*"),
+          minutes = (120 * id).toInt, toDate = None, cronExpr = "* * * * *",
+          monitorExpr = if (id % 2 == 0) "mean > 1000000" else "count > 0")
+      }
+      specs.foreach(sch.register(_, t("2024-01-15 11:59:00")))
+      settle(); collects.set(0); writes.clear()
+      val (fired, _) = sch.tick(t("2024-01-15 12:00:00"))
+      sch.awaitIdle(); settle()
+      sch.shutdown()
+      assert(fired.size == k)
+      assert(collects.get == 1, s"K=$k: ${collects.get} collects")
+      val w = writes.asScala.toSeq
+      assert(w.count(_.endsWith("/job_data")) == 1 && w.count(_.endsWith("/job_errors")) == 1 &&
+        w.size == 2, s"K=$k: writes $w")
+      // one job_errors file per failing job, none for passing jobs
+      val failing = specs.filter(_.id % 2 == 0).map(_.id)
+      val files = new java.io.File(s"$tmp/job_errors").listFiles().filter(_.isDirectory)
+        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+      assert(files == failing.map(id => s"job_id=$id" -> 1).toMap, s"K=$k: $files")
+    }
+    finally spark.listenerManager.unregister(listener)
+  }
+
+  test("batch persistence equals the single-monitor path, byte for byte") {
+    val tmp = tempDir("graft-sched-persist-eq")
+    val at = Timestamp.valueOf("2024-01-15 12:00:00")
+    val specs = Seq(
+      MonitorSpec(1, "eq1", Seq("events.*"), 240, None, "* * * * *", "count > 0"),
+      MonitorSpec(2, "eq2", Seq("events.*"), 480, None, "* * * * *", "mean > 1000000"),
+      // overlapping targets: the chart merges a metric across targets
+      MonitorSpec(3, "eq3", Seq("events.click", "events.{click,view}"), 720, None,
+        "* * * * *", "max < 0"))
+    graft.engine.Runner.runBatch(spark, events, specs, at,
+      s"$tmp/batch/job_data", s"$tmp/batch/job_errors")
+    specs.foreach(sp => graft.engine.Runner.runOnce(spark, events, sp, at,
+      s"$tmp/solo/job_data", s"$tmp/solo/job_errors"))
+    def rows(table: String, cols: String*)(side: String) =
+      spark.read.parquet(s"$tmp/$side/$table").select(cols.head, cols.tail: _*).collect()
+        .map(_.toSeq).toSeq.sortBy(_.toString)
+    val jobData = rows("job_data", "job_id", "window_end", "status", "data") _
+    val jobErrors = rows("job_errors", "job_id", "at", "message", "status") _
+    assert(jobData("batch").size == 3 && jobData("batch") == jobData("solo"))
+    assert(jobErrors("batch").nonEmpty && jobErrors("batch") == jobErrors("solo"))
   }
 }
